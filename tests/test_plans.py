@@ -67,11 +67,11 @@ def test_rollup_tier_no_extra_python(events):
 
 
 def test_tier1_fused_zero_exchange(spark):
-    """Kernel-fused tier-1 (matrix_profile_tier1) is a pure map over the
-    scan: per-bucket partials fold inside the kernel task, so NOTHING
-    shuffles above it — the map-side pre-aggregation that keeps the
-    north-star rolled chain kernel-dominated at 100 TB. rollup_rollup on
-    top adds exactly the ONE bounded tier-1-row exchange."""
+    """Kernel-fused tier-1 (matrix_profile_tier1) folds per-bucket partials
+    inside the kernel task, then hashes the tier-1 rows by doc_id ONCE:
+    that single bounded exchange sits above the kernel, and every
+    re-rollup on top (tier-2, tier-3, ...) reuses it with no exchange of
+    its own."""
     from tsmp_spark.operators import rollup_rollup
     from tsmp_spark.operators.matrix_profile import matrix_profile_tier1
 
@@ -81,10 +81,39 @@ def test_tier1_fused_zero_exchange(spark):
     )
     t1 = matrix_profile_tier1(seqs, 8, 8, num_partitions=0)
     plan = _plan(t1)
-    assert "Exchange" not in plan
     assert plan.count("MapInPandas") == 1
-    plan2 = _plan(rollup_rollup(t1, 4))
-    assert plan2.count("Exchange") == 1
+    assert plan.count("Exchange") == 1
+    plan3 = _plan(rollup_rollup(rollup_rollup(t1, 4), 4))
+    assert plan3.count("Exchange") == 1, plan3
+    above, below = plan3.split("MapInPandas")
+    assert "Exchange hashpartitioning(doc_id" in above
+    assert "Exchange" not in below
+
+
+def test_token_tier_chain_single_exchange(spark):
+    """The relational tier chain (nested_to_long → rollup_tier →
+    rollup_rollup → gap_fill(locf) → retention_expire) is hash-partitioned
+    by doc_id once, on the nested rows: every per-key operator above
+    reuses it — no per-key broadcast, no spine join."""
+    from tsmp_spark.operators import (
+        gap_fill,
+        nested_to_long,
+        retention_expire,
+        rollup_rollup,
+    )
+
+    seqs = spark.createDataFrame(
+        [(f"d{k}", [float((i * (k + 3)) % 11) for i in range(96)]) for k in range(3)],
+        "doc_id string, tokens array<double>",
+    )
+    long = nested_to_long(seqs).withColumn("at", F.col("pos"))
+    t2 = rollup_rollup(rollup_tier(long, 8, value_col="value", index_col="at"), 4)
+    plan = _plan(retention_expire(gap_fill(t2, locf=True), 6))
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("Exchange hashpartitioning(doc_id") == 1, plan
+    assert "BroadcastExchange" not in plan
+    assert "SortMergeJoin" not in plan
+    assert plan.index("Exchange") > plan.index("Generate posexplode"), plan
 
 
 def test_minhash_pure_jvm(docs):

@@ -278,12 +278,16 @@ def matrix_profile_tier1(
     profile is already a numpy array inside the kernel task, so the
     per-bucket (min, argmin, seq-sum, max, n) fold happens there and the
     operator ships ONE row per (series, bucket) — ``bucket``× fewer rows
-    and ZERO Exchange above the kernel, vs the relational chain's
-    exchange of every exploded window row. At 100 TB the difference is
-    shipping per-bucket partials instead of per-window rows to the
-    rollup — the same reason combiners exist. Higher tiers re-roll this
-    output relationally (``rollup_rollup``: mins-of-mins, ONE bounded
-    shuffle of tier-1 rows).
+    than the relational chain's exchange of every exploded window row.
+    At 100 TB the difference is shipping per-bucket partials instead of
+    per-window rows to the rollup — the same reason combiners exist.
+
+    The input is rebalanced round-robin (the kernel is CPU-bound; hashing
+    a few long series by key would skew it), and the tier-1 rows are then
+    hash-partitioned by ``doc_id`` ONCE above the kernel: that single
+    bounded exchange of tier-1 rows serves every higher tier, so the
+    relational re-rollups on top (``rollup_rollup``: mins-of-mins) and
+    ``gap_fill``/``retention_expire`` add no exchange of their own.
 
     Exactness contract with the relational path: ``mp_avg`` accumulates
     the bucket's finite values SEQUENTIALLY in position order (numpy
@@ -337,11 +341,13 @@ def matrix_profile_tier1(
                 yield pd.DataFrame(out)
 
     base = sequences.select("doc_id", "tokens")
+    parallelism = sequences.sparkSession.sparkContext.defaultParallelism
     if num_partitions is None:
-        num_partitions = sequences.sparkSession.sparkContext.defaultParallelism
+        num_partitions = parallelism
     if num_partitions > 0:
         base = base.repartition(num_partitions)
-    return base.mapInPandas(kernel, TIER1_SCHEMA)
+    tier1 = base.mapInPandas(kernel, TIER1_SCHEMA)
+    return tier1.repartition(num_partitions or parallelism, "doc_id")
 
 
 def _matrix_profile_chunked_nested(

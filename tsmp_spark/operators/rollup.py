@@ -4,9 +4,12 @@ Pure Catalyst (no Python in the hot path): tier-0 is the full-resolution
 profile table from ``matrix_profile``; tier k downsamples by bucketing
 ``pos`` (or event time) and aggregating with min/argmin/avg/max/count —
 PAA semantics (tsmp misc.R:463-486) extended with the index-carrying
-argmin the profile needs. Gap-fill materializes missing buckets via
-``sequence()`` + left join with optional LOCF. Retention expires buckets
-older than a per-tier horizon.
+argmin the profile needs. Gap-fill materializes missing buckets by
+exploding ``sequence(bucket, lead(bucket) - 1)`` per observed row, with
+optional LOCF or interpolation. Retention expires buckets older than a
+per-key horizon. Both are windows partitioned by the key, so on a tier
+hash-partitioned by ``doc_id`` (``nested_to_long``,
+``matrix_profile_tier1``) they add no exchange.
 
 Everything here is expressible in ANSI SQL — each operator has a DuckDB
 oracle in ``__spark_entry__.py``.
@@ -113,63 +116,64 @@ def gap_fill(
     interpolate: bool = False,
 ) -> DataFrame:
     """Materialize missing buckets per key over each key's [min, max] bucket
-    range: ``sequence()`` + explode + left join. ``locf=True`` fills value
-    columns with the last observation carried forward
-    (``last(..., ignorenulls)`` over an unbounded-preceding window);
-    ``interpolate=True`` fills them with the linear interpolation between
-    the surrounding observed buckets (the TimescaleDB ``interpolate``
-    gapfill function) — gaps before the first / after the last
-    observation stay NULL (there is nothing to interpolate toward;
+    range. Each observed row explodes ``sequence(bucket, next - 1)``, where
+    ``next`` is ``lead(bucket)`` over ``PARTITION BY key ORDER BY bucket``:
+    the row itself plus the gap up to the next observation, whose non-key
+    columns are NULL (``gap_filled`` marks them). One window, no groupBy
+    and no join, so a tier already hash-partitioned by the key adds no
+    exchange. Rows with a NULL key or bucket are dropped; a duplicated
+    ``(key, bucket)`` keeps every copy and its gap is generated once.
+
+    ``locf=True`` fills value columns with the last observation carried
+    forward (``last(..., ignorenulls)`` over an unbounded-preceding
+    window); ``interpolate=True`` fills them with the linear interpolation
+    between the surrounding observed buckets (the TimescaleDB
+    ``interpolate`` gapfill function) — gaps before the first / after the
+    last observation stay NULL (there is nothing to interpolate toward;
     within the [min, max] spine that only happens when a fill column is
     NULL on its own observed rows). The fraction ``(b-pb)/(nb-pb)`` is
     exact integer arithmetic and the expression order is fixed, so on
-    r9-rounded inputs the fill is cross-engine IEEE-identical."""
+    r9-rounded inputs the fill is cross-engine IEEE-identical. Both fills
+    reuse the spine's window partitioning."""
     if locf and interpolate:
         raise ValueError("gap_fill: locf and interpolate are exclusive")
+    b = F.col(bucket_col)
+    by_bucket = Window.partitionBy(key_col).orderBy(bucket_col)
+    # duplicates give next == bucket: greatest() keeps the range ascending
+    last = F.greatest(F.coalesce(F.lead(b).over(by_bucket) - 1, b), b)
     spine = (
-        tier.groupBy(key_col)
-        .agg(F.min(bucket_col).alias("_lo"), F.max(bucket_col).alias("_hi"))
-        .select(
-            key_col,
-            F.explode(F.sequence(F.col("_lo"), F.col("_hi"))).alias(bucket_col),
-        )
+        tier.filter(F.col(key_col).isNotNull() & b.isNotNull())
+        .withColumn("_last", last)
+        .withColumn("_b", F.explode(F.sequence(b, F.col("_last"))))
     )
-    joined = spine.join(tier, [key_col, bucket_col], "left")
-    joined = joined.withColumn("gap_filled", F.col("n").isNull())
+    observed = F.col("_b") == b
+    rest = [c for c in tier.columns if c not in (key_col, bucket_col)]
+    filled = spine.select(
+        key_col,
+        F.col("_b").alias(bucket_col),
+        *[F.when(observed, F.col(c)).alias(c) for c in rest],
+        (~observed).alias("gap_filled"),
+    )
+    upto = by_bucket.rowsBetween(Window.unboundedPreceding, 0)
     if locf:
-        w = (
-            Window.partitionBy(key_col)
-            .orderBy(bucket_col)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
         for c in fill_cols:
-            joined = joined.withColumn(c, F.last(c, ignorenulls=True).over(w))
+            filled = filled.withColumn(c, F.last(c, ignorenulls=True).over(upto))
     if interpolate:
-        wp = (
-            Window.partitionBy(key_col)
-            .orderBy(bucket_col)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        wn = (
-            Window.partitionBy(key_col)
-            .orderBy(bucket_col)
-            .rowsBetween(0, Window.unboundedFollowing)
-        )
-        b = F.col(bucket_col)
+        onward = by_bucket.rowsBetween(0, Window.unboundedFollowing)
         for c in fill_cols:
             obs_b = F.when(F.col(c).isNotNull(), b)
-            pv = F.last(c, ignorenulls=True).over(wp)
-            pb = F.last(obs_b, ignorenulls=True).over(wp)
-            nv = F.first(c, ignorenulls=True).over(wn)
-            nb = F.first(obs_b, ignorenulls=True).over(wn)
+            pv = F.last(c, ignorenulls=True).over(upto)
+            pb = F.last(obs_b, ignorenulls=True).over(upto)
+            nv = F.first(c, ignorenulls=True).over(onward)
+            nb = F.first(obs_b, ignorenulls=True).over(onward)
             lerp = pv + (nv - pv) * ((b - pb) / (nb - pb))
-            joined = joined.withColumn(
+            filled = filled.withColumn(
                 c,
                 F.when(F.col(c).isNotNull(), F.col(c)).when(
                     pv.isNotNull() & nv.isNotNull(), lerp
                 ),
             )
-    return joined
+    return filled
 
 
 def retention_expire(
@@ -179,13 +183,17 @@ def retention_expire(
     key_col: str = "doc_id",
 ) -> DataFrame:
     """Retention: keep only the trailing ``horizon_buckets`` buckets per
-    key. Catalyst turns the max-bucket lookup into a cheap aggregate +
-    broadcast join at scale (per-key horizons, not a global timestamp)."""
-    latest = tiers.groupBy(key_col).agg(F.max(bucket_col).alias("_latest"))
+    key (per-key horizons, not a global timestamp). The latest bucket is
+    ``max(bucket) OVER (PARTITION BY key)`` — no per-key table is built or
+    broadcast, and a tier already hash-partitioned by the key adds no
+    exchange. Rows with a NULL key or bucket are dropped."""
+    latest = F.max(bucket_col).over(Window.partitionBy(key_col))
+    rest = [c for c in tiers.columns if c != key_col]
     return (
-        tiers.join(F.broadcast(latest), key_col)
+        tiers.filter(F.col(key_col).isNotNull())
+        .withColumn("_latest", latest)
         .filter(F.col(bucket_col) > F.col("_latest") - horizon_buckets)
-        .drop("_latest")
+        .select(key_col, *rest)
     )
 
 

@@ -61,8 +61,18 @@ def long_to_nested(long_df: DataFrame, source: str | None = None) -> DataFrame:
 
 
 def nested_to_long(nested: DataFrame, value_type: str = "double") -> DataFrame:
-    """(doc_id, tokens, ...) → (doc_id, pos, value) via posexplode."""
-    return nested.select(
+    """(doc_id, tokens, ...) → (doc_id, pos, value) via posexplode.
+
+    The nested rows are hash-partitioned by ``doc_id`` BEFORE the explode,
+    so the one exchange moves one row per series, never exploded rows.
+    Generate keeps that partitioning, and every per-key operator above it
+    — ``rollup_tier``, ``rollup_rollup``, ``gap_fill``,
+    ``retention_expire`` keyed by ``doc_id`` — reuses it
+    (ClusteredDistribution subset rule, as in ``rollup_chain``)."""
+    hashed = nested.repartition(
+        nested.sparkSession.sparkContext.defaultParallelism, "doc_id"
+    )
+    return hashed.select(
         "doc_id",
         F.posexplode(F.col("tokens").cast(f"array<{value_type}>")).alias("pos", "value"),
     )

@@ -3723,11 +3723,12 @@ def q_mp_chunked_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-filtered scans; zero token broadcast in the plan, pinned in
     tests/test_spark_operators.py). Same brute-force SQL oracle: the
     store path is bit-exact vs the broadcast path by construction."""
-    import tempfile
-
     from .operators import matrix_profile
+    from .operators.cache import temp_dir
 
-    store = tempfile.mkdtemp(prefix="tsmp_mp_store_") + "/blocks"
+    # read lazily by the chunk tasks: removed by release_caches() after
+    # the caller's action
+    store = temp_dir("tsmp_mp_store_") + "/blocks"
     prof = _finite_profile(
         matrix_profile(
             _sequences(spark, sf_dir), W, long_series_threshold=16,
@@ -10951,8 +10952,9 @@ ORACLES["integrity_audit"] = SQL_INTEGRITY_AUDIT
 
 def q_mp_tier1_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kernel-FUSED tier-1: matrix profile + first rollup tier in ONE
-    map-only pass (matrix_profile_tier1) — per-bucket partials computed
-    inside the kernel task, ZERO exchange above it. Must hash-match the
+    map pass (matrix_profile_tier1) — per-bucket partials computed
+    inside the kernel task, then ONE hash(doc_id) exchange of tier-1 rows
+    that every higher tier reuses. Must hash-match the
     relational rollup_tier chain's oracle exactly (same fold order,
     same tie-breaks) — the map-side pre-aggregation that makes the
     north-star rolled chain kernel-dominated at scale."""
@@ -14319,6 +14321,7 @@ def q_sessions_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained sink is exactly the batch split, sentinel-free by
     construction, and ``session_idx`` is recovered as the per-user
     start-order rank."""
+    import shutil
     import tempfile
     import uuid
 
@@ -14338,23 +14341,28 @@ def q_sessions_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("ts", F.timestamp_seconds(F.lit(sentinel_sec)))
     )
     base = tempfile.mkdtemp(prefix="sess_replay_")
-    ev.coalesce(1).write.mode("overwrite").parquet(f"{base}/d0")
-    sentinels.coalesce(1).write.mode("overwrite").parquet(f"{base}/d1")
-
-    stream = spark.readStream.schema("user_id long, ts timestamp").option(
-        "pathGlobFilter", "*.parquet"
-    ).parquet(f"{base}/d*")
-    out = sessionize_stream(stream, gap="2 hours", watermark="4 hours")
     name = "sess_sink_" + uuid.uuid4().hex[:8]
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{base}/ckpt")
-        .start()
-    )
-    q.awaitTermination(300)
+    try:
+        ev.coalesce(1).write.mode("overwrite").parquet(f"{base}/d0")
+        sentinels.coalesce(1).write.mode("overwrite").parquet(f"{base}/d1")
+
+        stream = spark.readStream.schema("user_id long, ts timestamp").option(
+            "pathGlobFilter", "*.parquet"
+        ).parquet(f"{base}/d*")
+        out = sessionize_stream(stream, gap="2 hours", watermark="4 hours")
+        q = (
+            out.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .option("checkpointLocation", f"{base}/ckpt")
+            .start()
+        )
+        q.awaitTermination(300)
+        q.stop()
+    finally:
+        # the memory sink holds the drained sessions; nothing reads base
+        shutil.rmtree(base, ignore_errors=True)
     snap = spark.table(name)
     wnd = Window.partitionBy("user_id").orderBy("session_start")
     return snap.select(

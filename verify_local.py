@@ -13,8 +13,9 @@ re-running — see CORRECTNESS_ADV_r04.json.
 
 ``--changed [GIT_REF]`` (CI mode) re-gates only the queries affected by
 the working-tree diff against GIT_REF (default HEAD): changed
-``tsmp_spark/{operators,streaming,codecs}/X.py`` modules map to the
-registry entries whose source imports them. A change anywhere else in
+``tsmp_spark/{operators,streaming,codecs}/X.py`` modules, plus every
+module there that imports them, map to the registry entries whose source
+(or the queries-module helpers it calls) imports them. A change anywhere else in
 ``tsmp_spark/`` (mpcore, queries.py, plans, api) falls back to the FULL
 sweep — mpcore edits also require the reference-golden suite
 (tests/test_reference_goldens.py), which this harness reminds you of but
@@ -142,29 +143,82 @@ def run(sf_dir: str | None = None, only: set[str] | None = None,
     return 0, results
 
 
-def _query_modules(fn) -> set[str]:
-    """Modules under tsmp_spark.{operators,streaming,codecs} a registry
-    callable imports — by source scan, resolving package-level re-exports
-    through the attribute's ``__module__``."""
-    import importlib
-    import inspect
-    import re
+_ROOTS = ("operators", "streaming", "codecs")
 
+
+def _imports(tree, package: tuple[str, ...]) -> set[str]:
+    """``root.module`` names under tsmp_spark.{operators,streaming,codecs}
+    that the relative ``from ... import`` statements in ``tree`` (parsed in
+    package ``tsmp_spark.<package>``) import — parenthesized or not.
+    Package-level re-exports resolve through the attribute's ``__module__``."""
+    import ast
+    import importlib
+
+    found: set[str] = set()
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.ImportFrom) or node.level == 0:
+            continue
+        base = package[: len(package) - (node.level - 1)]
+        full = base + tuple(node.module.split(".") if node.module else ())
+        if not full or full[0] not in _ROOTS:
+            continue
+        if len(full) > 1:
+            found.add(f"{full[0]}.{full[1]}")
+            continue
+        pkg = importlib.import_module(f"tsmp_spark.{full[0]}")
+        for alias in node.names:
+            obj = getattr(pkg, alias.name, None)
+            mod = getattr(obj, "__module__", None) or getattr(obj, "__name__", "")
+            if mod.startswith("tsmp_spark."):
+                found.add(".".join(mod.split(".")[1:3]))
+    return found
+
+
+def _query_modules(fn, seen: set | None = None) -> set[str]:
+    """Modules under tsmp_spark.{operators,streaming,codecs} a registry
+    callable imports, including through the module-level helpers of its
+    own module that it calls (``_profile``, ``_sequences``, ...)."""
+    import ast
+    import inspect
+    import textwrap
+
+    seen = set() if seen is None else seen
+    seen.add(fn)
     try:
-        src = inspect.getsource(fn)
+        tree = ast.parse(textwrap.dedent(inspect.getsource(fn)))
     except (OSError, TypeError):
         return set()
-    found: set[str] = set()
-    for m in re.finditer(r"from \.(operators|streaming|codecs)\.(\w+) import", src):
-        found.add(f"{m.group(1)}.{m.group(2)}")
-    for m in re.finditer(r"from \.(operators|streaming|codecs) import ([^\n(]+)", src):
-        pkg = importlib.import_module(f"tsmp_spark.{m.group(1)}")
-        for nm in m.group(2).split(","):
-            obj = getattr(pkg, nm.strip(), None)
-            mod = getattr(obj, "__module__", "")
-            if mod.startswith("tsmp_spark."):
-                found.add(mod.removeprefix("tsmp_spark."))
+    found = _imports(tree, ())
+    for node in ast.walk(tree):
+        helper = fn.__globals__.get(node.id) if isinstance(node, ast.Name) else None
+        if (inspect.isfunction(helper) and helper.__module__ == fn.__module__
+                and helper not in seen):
+            found |= _query_modules(helper, seen)
     return found
+
+
+def _importers(mods: set[str]) -> set[str]:
+    """``mods`` plus every module under the mapped roots that imports one
+    of them, transitively (tokens.py imports dedup.py, so a dedup.py edit
+    re-gates the token queries too)."""
+    import ast
+    import glob
+    import os
+
+    pkg_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "tsmp_spark")
+    deps = {}
+    for root in _ROOTS:
+        for path in glob.glob(os.path.join(pkg_dir, root, "*.py")):
+            name = os.path.basename(path)[:-3]
+            if name != "__init__":
+                with open(path) as f:
+                    deps[f"{root}.{name}"] = _imports(ast.parse(f.read()), (root,))
+    out = set(mods)
+    while True:
+        more = {m for m, d in deps.items() if d & out} - out
+        if not more:
+            return out
+        out |= more
 
 
 def changed_queries(ref: str = "HEAD") -> set[str] | None:
@@ -203,8 +257,10 @@ def changed_queries(ref: str = "HEAD") -> set[str] | None:
     # the RAW registry (entry_mod.queries() wraps each callable in a UTC
     # shim whose source hides the imports)
     from tsmp_spark.queries import QUERIES as raw_queries
-    sel = {n for n, fn in raw_queries.items() if _query_modules(fn) & mods}
-    print(f"--changed: modules {sorted(mods)} -> {len(sel)} queries")
+    affected = _importers(mods)
+    sel = {n for n, fn in raw_queries.items() if _query_modules(fn) & affected}
+    print(f"--changed: modules {sorted(mods)} (with importers {sorted(affected)}) "
+          f"-> {len(sel)} queries")
     return sel
 
 
