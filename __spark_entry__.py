@@ -1,13 +1,13 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` — flagship pipeline on sf0.001 (SURVEY.md §7.4):
-scan → per-series MPX kernel → tier-1 rollup → top motif/discord per
-series, one Catalyst plan.
+scan → per-series MPX kernel fused with the tier-1 rollup, one Catalyst
+plan.
 
-``queries()`` / ``oracle_sql()`` — one entry per implemented operator from
-SURVEY.md §2 (registry in ``tsmp_spark/queries.py``). 30 of 32 queries are
-DuckDB-oracle-checked, including the matrix-profile kernels themselves via
-a brute-force z-normalized MP written in pure SQL.
+``queries()`` / ``oracle_sql()`` — the query registry
+(``tsmp_spark/queries.py``). Every query is checked against a DuckDB
+oracle, including the matrix-profile kernels themselves via a brute-force
+z-normalized MP written in pure SQL.
 """
 
 from __future__ import annotations
@@ -28,17 +28,14 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     from pyspark.sql import functions as F
 
-    from tsmp_spark.operators import rollup_tier_nested
-    from tsmp_spark.operators.matrix_profile import matrix_profile_nested
+    from tsmp_spark.operators.matrix_profile import matrix_profile_tier1
     from tsmp_spark.operators.series import events_to_nested
 
     sf_dir = "/root/testdata/sf0.001"
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    # one-exchange conversion -> Arrow kernel on nested arrays ->
-    # shuffle-free in-array tier rollup (see SCALE.md)
-    sequences = events_to_nested(events)
-    profile = matrix_profile_nested(sequences, window_size=8)
-    tier1 = rollup_tier_nested(profile, bucket=8)
+    # one-exchange conversion -> Arrow kernel that folds each series'
+    # profile into its tier-1 buckets in the same task (see SCALE.md)
+    tier1 = matrix_profile_tier1(events_to_nested(events), 8, 8)
     return tier1.select(
         "doc_id",
         F.col("bucket").cast("bigint").alias("bucket"),

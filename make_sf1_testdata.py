@@ -1,4 +1,4 @@
-"""Native sf1 synthetic dataset — the 10× bench leg (VERDICT r4 Next #2).
+"""Native sf1 synthetic dataset — a 10× scale leg (VERDICT r4 Next #2).
 
 Generates a TRUE sf1 dataset (not a replicated sf0.1): every table drawn
 fresh at 10× row counts from the same distribution family as the
@@ -10,7 +10,7 @@ sized so Spark can actually split the files (the driver's single-row-
 group files can't), which is the honest layout at this scale.
 
 Usage: python make_sf1_testdata.py [outdir]      (default /tmp/sf1)
-Then:  SPARK_GRAFT_SF_DIR=<outdir> python bench.py
+Then:  python verify_local.py --dataset <outdir> [query ...]
 """
 
 from __future__ import annotations

@@ -294,7 +294,7 @@ def main(argv=None) -> int:
             )
         writer.parquet(f"{args.output}/tier{k}")
 
-        def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             pdf = pdf.sort_values("bucket")
             blob = pack_rollup(
                 pdf["bucket"].to_numpy(np.int64), pdf["mp_min"].to_numpy(np.float64)

@@ -1,6 +1,15 @@
 import pytest
 
 
+def pytest_configure(config):
+    # a grouped-map function with a partly annotated signature silently
+    # falls back to the default eval type; annotate every parameter
+    config.addinivalue_line(
+        "filterwarnings",
+        "error:Cannot infer the eval type from type hints:UserWarning",
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from tsmp_spark.session import get_spark

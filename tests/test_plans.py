@@ -700,48 +700,6 @@ def test_registry_wide_plan_audit(spark):
     assert not offenders, offenders
 
 
-def test_rollup_chain_single_exchange_above_kernel(events):
-    """Tier-1 + tier-2 fused: ONE hash(doc_id) exchange serves both tier
-    groupBys (ClusteredDistribution subset rule — every tier key
-    (doc_id, bucket div f) contains doc_id), so the whole rollup chain
-    above the kernel runs in a single stage. Regression for the r3
-    rolled-points scaling shortfall (exchange-dominated short stages)."""
-    from tsmp_spark.operators import rollup_chain, rollup_rollup
-
-    nested = events_to_nested(events)
-    prof = matrix_profile_nested(nested, 8, long_series_threshold=None)
-    t1, t2 = rollup_chain(prof, 8, factors=(4,), parallelism=4)
-    plan = _plan(t2)
-    above = plan.split("MapInPandas")[0]
-    assert above.count("Exchange") == 1, above
-    # and a further tier still adds no exchange
-    t3 = rollup_rollup(t2, 4)
-    above3 = _plan(t3).split("MapInPandas")[0]
-    assert above3.count("Exchange") == 1, above3
-
-
-def test_rollup_chain_matches_two_shuffle_path(events):
-    """Fused chain values are EXACTLY the classic explode→groupBy path's
-    (same aggregates, same tie-breaks — only the physical layout differs)."""
-    import pandas as pd
-
-    from tsmp_spark.operators import rollup_chain, rollup_rollup, rollup_tier
-    from tsmp_spark.operators.matrix_profile import (
-        _explode_nested,
-        matrix_profile_nested,
-    )
-
-    nested = events_to_nested(events)
-    prof = matrix_profile_nested(nested, 8, long_series_threshold=None)
-    t1, t2 = rollup_chain(prof, 8, factors=(4,), parallelism=4)
-    t1_ref = rollup_tier(_explode_nested(prof), 8)
-    t2_ref = rollup_rollup(t1_ref, 4)
-    for got, exp in ((t1, t1_ref), (t2, t2_ref)):
-        g = got.orderBy("doc_id", "bucket").toPandas().reset_index(drop=True)
-        e = exp.orderBy("doc_id", "bucket").toPandas().reset_index(drop=True)
-        pd.testing.assert_frame_equal(g, e)
-
-
 def test_hdr_rollup_single_exchange_no_python(events):
     """HDR sketch build is ONE combinable groupBy over per-row integer
     expressions — no Python, no join, no window; the index math

@@ -240,60 +240,69 @@ def test_masked_profile_is_null_externally(spark):
     """The kernel's NaN (masked window / no neighbor) must surface as SQL
     NULL — not NaN — so relational aggregates (count/min/avg, DuckDB
     oracles) treat masked positions correctly. An all-constant series
-    masks every window (zero variance everywhere -> pi = -1)."""
+    masks every window (zero variance everywhere -> pi = -1); a constant
+    prefix masks part of a bucket; 50 tokens leave a ragged 3-window tail
+    bucket. rollup_tier counts only unmasked windows and keeps all-masked
+    buckets with NULL aggregates."""
     import pandas as pd
     from pyspark.sql import functions as F
 
     from tsmp_spark.operators import matrix_profile, rollup_tier
 
+    walk = np.cumsum(np.random.default_rng(5).choice([-1.0, 1.0], size=50))
     df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": ["flat"], "tokens": [[5.0] * 50]})
+        pd.DataFrame({
+            "doc_id": ["flat", "prefix", "walk"],
+            "tokens": [[5.0] * 50, [5.0] * 20 + walk[:30].tolist(), walk.tolist()],
+        })
     )
     prof = matrix_profile(df, 8, long_series_threshold=None)
     assert prof.filter(F.isnan("mp")).count() == 0  # never NaN externally
-    n_rows = prof.count()
-    assert n_rows == 43 and prof.filter(F.col("mp").isNull()).count() == n_rows
-    t1 = rollup_tier(prof, 8)
-    assert t1.filter(F.col("n") != 0).count() == 0  # masked rows don't count
+    flat = prof.filter(F.col("doc_id") == "flat")
+    n_rows = flat.count()
+    assert n_rows == 43 and flat.filter(F.col("mp").isNull()).count() == n_rows
+
+    p = prof.toPandas().assign(bucket=lambda d: d.pos // 8)
+    t1 = rollup_tier(prof, 8).toPandas().set_index(["doc_id", "bucket"])
+    groups = p.groupby(["doc_id", "bucket"])
+    assert len(t1) == groups.ngroups == 18
+    for key, g in groups:
+        row = t1.loc[key]
+        live = g[g.mp.notna()].sort_values("pos")
+        assert row.n == len(live), key  # masked rows don't count
+        if live.empty:
+            assert pd.isna(row.mp_min) and pd.isna(row.pi_argmin), key
+            assert pd.isna(row.mp_avg) and pd.isna(row.mp_max), key
+            continue
+        k = live.mp.idxmin()  # first minimum = smallest pos
+        assert (row.mp_min, row.pi_argmin) == (live.mp[k], live.pi[k]), key
+        assert row.mp_max == live.mp.max(), key
+        assert row.mp_avg == pytest.approx(live.mp.mean(), rel=1e-12), key
+    assert t1.loc[("walk", 5)].n == 3  # ragged tail
+    assert 0 < t1.loc[("prefix", 1)].n < 8  # partly masked bucket
 
 
-def test_rollup_tier_nested_equals_exploded(spark):
-    """Shuffle-free in-array tier-1 == explode->groupBy tier-1, including
-    masked (NULL) windows and ragged tail buckets."""
-    import pandas as pd
-
-    from tsmp_spark.operators import matrix_profile, rollup_tier, rollup_tier_nested
-    from tsmp_spark.operators.matrix_profile import matrix_profile_nested
+def test_entry_equals_relational_tier1(spark):
+    """The flagship ``entry()`` returns rows, equal after the same
+    rounding to rollup_tier over the exploded profile with its all-masked
+    buckets (n = 0) dropped."""
+    import __spark_entry__
     from tsmp_spark.operators.series import events_to_nested
 
-    seq = events_to_nested(
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    got = __spark_entry__.entry(spark)
+    events = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
+    prof = matrix_profile(events_to_nested(events), 8)
+    exp = rollup_tier(prof, 8).filter(F.col("n") > 0).select(
+        "doc_id",
+        F.col("bucket").cast("bigint").alias("bucket"),
+        F.round("mp_min", 4).alias("mp_min"),
+        F.col("pi_argmin").cast("bigint").alias("pi_argmin"),
+        F.round("mp_avg", 4).alias("mp_avg"),
+        F.col("n").cast("bigint").alias("n"),
     )
-    flat = spark.createDataFrame(
-        pd.DataFrame({"doc_id": ["flat"], "tokens": [[5.0] * 50]})
-    ).selectExpr("doc_id", "tokens", "size(tokens) n_tok", "'t' source")
-    seq = seq.unionByName(flat)
-    a = rollup_tier(matrix_profile(seq, 8, long_series_threshold=None), 8)
-    b = rollup_tier_nested(
-        matrix_profile_nested(seq, 8, long_series_threshold=None), 8
-    )
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-def test_rollup_tier_nested_plan_shuffle_free(spark):
-    """The nested tier adds NO exchange beyond the kernel's own."""
-    from tsmp_spark.operators import rollup_tier_nested
-    from tsmp_spark.operators.matrix_profile import matrix_profile_nested
-    from tsmp_spark.operators.series import events_to_nested
-
-    seq = events_to_nested(
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    )
-    nested = matrix_profile_nested(seq, 8, long_series_threshold=None)
-    base = nested._jdf.queryExecution().executedPlan().toString().count("Exchange")
-    tier = rollup_tier_nested(nested, 8)
-    t = tier._jdf.queryExecution().executedPlan().toString().count("Exchange")
-    assert t == base
+    assert got.columns == exp.columns
+    assert got.count() > 0
+    assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
 
 
 def test_cosine_carried_norms_bit_identical(spark):

@@ -1,7 +1,6 @@
-"""Column-expression helpers — the scalar/math surface of tsmp (§2.8)
-re-expressed as JVM-side Spark SQL expressions (whole-stage codegen; no
-Python). Window-based rolling stats mirror misc.R's fast_avg_sd semantics
-(population SD)."""
+"""Column-expression helpers the query registry shares, as JVM-side Spark
+SQL expressions (whole-stage codegen; no Python): the subsequence window
+frame and the engine-wide low-variance threshold."""
 
 from __future__ import annotations
 
@@ -21,63 +20,3 @@ def lowvar_threshold_expr(mu: Column) -> Column:
 def rolling_window(key: str, order: str, w: int) -> WindowSpec:
     """Forward-looking frame [pos, pos+w-1] — the subsequence window."""
     return Window.partitionBy(key).orderBy(order).rowsBetween(0, w - 1)
-
-
-def moving_avg(value: Column, win: WindowSpec) -> Column:
-    return F.avg(value).over(win)
-
-
-def moving_sd(value: Column, win: WindowSpec) -> Column:
-    """Population SD (÷n) — parity-critical (tsmp math.cpp:4-20)."""
-    return F.stddev_pop(value).over(win)
-
-
-def moving_sum(value: Column, win: WindowSpec) -> Column:
-    return F.sum(value).over(win)
-
-
-def znorm_expr(value: Column, key_window: WindowSpec) -> Column:
-    """Z-normalize within a partition-wide window (math.cpp:132-142);
-    degenerate series are mean-centered only, per the engine-wide
-    scale-aware guard (mpcore.stats.lowvar_threshold) rather than the
-    reference's absolute 0.01 cutoff."""
-    mu = F.avg(value).over(key_window)
-    sd = F.stddev_pop(value).over(key_window)
-    return F.when(sd < lowvar_threshold_expr(mu), value - mu).otherwise(
-        (value - mu) / sd
-    )
-
-
-def ed_corr_expr(d: Column, w: int) -> Column:
-    """ED → Pearson (misc.R:77-84)."""
-    return (2.0 * w - d * d) / (2.0 * w)
-
-
-def corr_ed_expr(c: Column, w: int) -> Column:
-    """Pearson → ED (misc.R:86-91)."""
-    return F.sqrt(2.0 * w * (1.0 - F.least(c, F.lit(1.0))))
-
-
-def paa_bucket(pos: Column, factor: int) -> Column:
-    """PAA bucket id (misc.R:463-486): groupBy this + avg(value)."""
-    return F.floor(pos / factor)
-
-
-def complexity_expr(value: Column, key: str, order: str) -> Column:
-    """complexity = sqrt(sum(diff(x)^2)) per key (misc.R:1007-1022) — use
-    inside a groupBy(key).agg on the lag-diff column."""
-    w = Window.partitionBy(key).orderBy(order)
-    d = value - F.lag(value).over(w)
-    return d * d
-
-
-def zero_crossing_flag(value: Column, key: str, order: str) -> Column:
-    """1 where the sign changes vs the previous non-zero sample."""
-    w = Window.partitionBy(key).orderBy(order)
-    prev = F.lag(value).over(w)
-    return (
-        F.when(prev.isNull(), 0)
-        .when((value > 0) & (prev < 0), 1)
-        .when((value < 0) & (prev > 0), 1)
-        .otherwise(0)
-    )

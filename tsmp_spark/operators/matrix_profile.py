@@ -505,7 +505,7 @@ def _matrix_profile_chunked_nested(
         SEG_PARTIAL_SCHEMA,
     )
 
-    def seg_merge_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def seg_merge_kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         order = pdf["chunk_id"].to_numpy().argsort(kind="stable")
         parts = [
             (

@@ -75,38 +75,6 @@ def rollup_rollup(tier: DataFrame, factor: int) -> DataFrame:
     )
 
 
-def rollup_chain(
-    nested_profile: DataFrame,
-    bucket: int,
-    factors: tuple[int, ...] = (4,),
-    parallelism: int | None = None,
-) -> list[DataFrame]:
-    """Tier-1..k rollups of a NESTED profile table sharing ONE exchange.
-
-    Every tier's grouping key ``(doc_id, bucket div f)`` has ``doc_id`` as
-    a subset, so hash-partitioning the nested rows by ``doc_id`` once
-    satisfies ClusteredDistribution for the whole chain (the same
-    exchange-reuse rule pinned for pack_sequences): explode → tier-1 →
-    tier-2 → … run in a single stage with zero further shuffles, and the
-    one exchange moves nested rows (series count), not exploded windows.
-    At 100 TB the profile table is already written partitioned by doc_id,
-    making even that exchange a no-op scan-through.
-
-    Returns ``[tier1, tier2, ...]`` — tier k+1 derives from tier k
-    (mins-of-mins), never from tier 0.
-    """
-    from .matrix_profile import _explode_nested
-
-    if parallelism is None:
-        parallelism = nested_profile.sparkSession.sparkContext.defaultParallelism
-    hashed = nested_profile.repartition(parallelism, "doc_id")
-    tier0 = _explode_nested(hashed, columns=("mp", "pi"))
-    tiers = [rollup_tier(tier0, bucket)]
-    for f in factors:
-        tiers.append(rollup_rollup(tiers[-1], f))
-    return tiers
-
-
 def gap_fill(
     tier: DataFrame,
     key_col: str = "doc_id",
@@ -276,98 +244,6 @@ def arc_count_cac(
     )
     return spine.select(
         key_col, F.col("p").alias("pos"), "arc_count", cac.alias("cac")
-    )
-
-
-def rollup_tier_nested(
-    nested_profile: DataFrame,
-    bucket: int,
-    value_col: str = "mp",
-    index_col: str = "pi",
-    key_col: str = "doc_id",
-) -> DataFrame:
-    """Tier-1 rollup computed INSIDE the nested profile arrays — the
-    zero-Exchange form of :func:`rollup_tier`.
-
-    ``matrix_profile_nested`` emits one row per series with array columns;
-    bucketing positions is then a per-row JVM expression (slice +
-    array_min over (value, pos, index) structs, struct ordering = the same
-    deterministic argmin tie-break as ``rollup_tier``), followed by ONE
-    explode of bucket structs — no exchange at all.
-
-    **Prefer ``rollup_tier(_explode_nested(x), bucket)`` for throughput**:
-    measured at the 8192-token input_hint shape (round 3), the
-    explode→groupBy path is ~2× faster steady (1.40 s vs 2.67 s from a
-    cached 1536-doc profile at local[32]) and ~10× cheaper on first
-    execution (3.7–6.5 s vs 56–65 s) — these slice/transform/aggregate
-    higher-order functions are INTERPRETED (never whole-stage-codegen)
-    and additionally need 2-3 HotSpot C2 passes, while explode feeds a
-    map-side partial aggregation inside WholeStageCodegen, so the
-    "full-resolution intermediate" it supposedly materializes never
-    exists as more than a row iterator and its shuffle is bucket-sized
-    either way. This form remains for the genuinely-exchange-free
-    property (a plan that must not add ANY exchange, e.g. composing
-    under an existing partitioning contract) and is equality-tested
-    against the explode path.
-    """
-    b = int(bucket)
-    mp = F.col(value_col)
-    pi = F.col(index_col)
-
-    def bucket_struct(bk):
-        # positions bk*b .. bk*b+b-1 (slice clips the tail automatically)
-        vals = F.slice(mp, bk * b + 1, b)
-        idxs = F.slice(pi, bk * b + 1, b)
-        trip = F.zip_with(
-            vals,
-            idxs,
-            lambda v, i: F.struct(v.alias("v"), i.alias("i")),
-        )
-        # attach absolute pos for the deterministic (value, pos, index)
-        # argmin; filter masked (NULL) entries
-        withpos = F.filter(
-            F.transform(
-                trip,
-                lambda s, j: F.struct(
-                    s["v"].alias("v"),
-                    (bk * b + j).cast("long").alias("pos"),
-                    s["i"].alias("i"),
-                ),
-            ),
-            lambda s: s["v"].isNotNull(),
-        )
-        vclean = F.transform(withpos, lambda s: s["v"])
-        winner = F.array_min(withpos)
-        n = F.size(withpos)
-        return F.struct(
-            bk.cast("long").alias("bucket"),
-            F.array_min(vclean).alias("mp_min"),
-            winner["i"].alias("pi_argmin"),
-            F.when(
-                n > 0,
-                F.aggregate(vclean, F.lit(0.0), lambda acc, x: acc + x) / n,
-            ).alias("mp_avg"),
-            F.array_max(vclean).alias("mp_max"),
-            n.cast("long").alias("n"),
-        )
-
-    n_buckets = F.ceil(F.size(mp) / F.lit(b)).cast("int")
-    # sequence(0, -1) yields a DESCENDING [0, -1] — guard the empty-profile
-    # case so it emits no buckets (matching rollup_tier on zero rows)
-    buckets = F.when(
-        n_buckets > 0,
-        F.transform(F.sequence(F.lit(0), n_buckets - 1), bucket_struct),
-    ).otherwise(F.array())
-    return nested_profile.select(
-        key_col, F.explode(buckets).alias("t")
-    ).select(
-        key_col,
-        F.col("t.bucket").alias("bucket"),
-        F.col("t.mp_min").alias("mp_min"),
-        F.col("t.pi_argmin").alias("pi_argmin"),
-        F.col("t.mp_avg").alias("mp_avg"),
-        F.col("t.mp_max").alias("mp_max"),
-        F.col("t.n").alias("n"),
     )
 
 

@@ -68,7 +68,7 @@ def nested_to_long(nested: DataFrame, value_type: str = "double") -> DataFrame:
     Generate keeps that partitioning, and every per-key operator above it
     — ``rollup_tier``, ``rollup_rollup``, ``gap_fill``,
     ``retention_expire`` keyed by ``doc_id`` — reuses it
-    (ClusteredDistribution subset rule, as in ``rollup_chain``)."""
+    (ClusteredDistribution subset rule)."""
     hashed = nested.repartition(
         nested.sparkSession.sparkContext.defaultParallelism, "doc_id"
     )

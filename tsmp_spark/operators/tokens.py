@@ -437,7 +437,7 @@ def shard_blobs(
 
     from ..codecs.tokenshard import encode_shard
 
-    def enc(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def enc(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("seq_idx")
         # the codec's index stores only (base, lengths): seq k decodes to
         # base + k, so gaps would silently relabel every later sequence —

@@ -1346,7 +1346,7 @@ def q_gorilla_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t1 = rollup_tier(_profile(spark, sf_dir), BUCKET).select("doc_id", "bucket", "mp_min")
 
-    def pack_unpack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack_unpack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("bucket")
         blob = pack_rollup(
             pdf["bucket"].to_numpy(np.int64), pdf["mp_min"].to_numpy(np.float64)
@@ -3369,36 +3369,6 @@ GROUP BY 1, 2
 
 QUERIES["rollup_stream"] = q_rollup_stream
 ORACLES["rollup_stream"] = SQL_ROLLUP_STREAM
-
-
-def q_mp_rollup_tier1_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tier-1 straight from the nested profile arrays (shuffle-free JVM
-    bucket aggregation) — must equal the explode->groupBy tier exactly,
-    so it shares SQL_MP_ROLLUP_TIER1."""
-    from .operators import rollup_tier_nested
-    from .operators.matrix_profile import matrix_profile_nested
-
-    nested = matrix_profile_nested(
-        _sequences(spark, sf_dir), W, long_series_threshold=None
-    )
-    t1 = rollup_tier_nested(nested, BUCKET).filter(
-        F.col("mp_min").isNotNull()
-        & ~F.isnan("mp_min")
-        & (F.col("mp_min") != float("inf"))
-    )
-    return t1.select(
-        "doc_id",
-        F.col("bucket").cast("bigint").alias("bucket"),
-        _r4("mp_min").alias("mp_min"),
-        F.col("pi_argmin").cast("bigint").alias("pi_argmin"),
-        _r4("mp_avg").alias("mp_avg"),
-        _r4("mp_max").alias("mp_max"),
-        F.col("n").cast("bigint").alias("n"),
-    )
-
-
-QUERIES["mp_rollup_tier1_nested"] = q_mp_rollup_tier1_nested
-ORACLES["mp_rollup_tier1_nested"] = SQL_MP_ROLLUP_TIER1
 
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -16863,7 +16833,7 @@ def q_simple8b_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", F.unix_timestamp("ts").cast("long").alias("sec")
     )
 
-    def pack_unpack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack_unpack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         secs = np.sort(pdf["sec"].to_numpy(np.int64))
         out = unpack_sorted_seconds(pack_sorted_seconds(secs))
         return pd.DataFrame(
@@ -18521,7 +18491,7 @@ ORACLES["cluster_purity"] = SQL_CLUSTER_PURITY
 # while the registry grew 32 -> 72 -> 170: the driver takes ``queries()`` in
 # dict insertion order and caps its per-round sweep.  Rotate so every query
 # that has never had a driver-verified correctness row leads the registry and
-# the 50 already covered by CORRECTNESS_r0{1,2,3}.json trail.  verify_local.py
+# the ones already covered by CORRECTNESS_r0{1,2,3}.json trail.  verify_local.py
 # still sweeps all entries regardless of order; see README.md "Driver
 # correctness coverage by round".
 _DRIVER_COVERED_R123 = frozenset({
@@ -18534,9 +18504,9 @@ _DRIVER_COVERED_R123 = frozenset({
     'gorilla_roundtrip', 'stompi_stream', 'fluss_segments',
     'analyze_motifs_discords', 'valmod', 'av_complexity', 'mstomp_2dim',
     'simple_2dim', 'chains', 'snippets', 'mp_subset', 'sdts', 'salient',
-    'floss_chunked', 'rollup_stream', 'mp_rollup_tier1_nested',
-    'multimodal_features', 'av_zerocrossing', 'ivf_ann', 'embedding_neardup',
-    'mp_chunked', 'repetition',
+    'floss_chunked', 'rollup_stream', 'multimodal_features',
+    'av_zerocrossing', 'ivf_ann', 'embedding_neardup', 'mp_chunked',
+    'repetition',
 })
 
 # Round 4's driver sweep covered these 50 first-time names

@@ -15,11 +15,12 @@ re-running — see CORRECTNESS_ADV_r04.json.
 the working-tree diff against GIT_REF (default HEAD): changed
 ``tsmp_spark/{operators,streaming,codecs}/X.py`` modules, plus every
 module there that imports them, map to the registry entries whose source
-(or the queries-module helpers it calls) imports them. A change anywhere else in
-``tsmp_spark/`` (mpcore, queries.py, plans, api) falls back to the FULL
-sweep — mpcore edits also require the reference-golden suite
-(tests/test_reference_goldens.py), which this harness reminds you of but
-does not run. Changes only to tests/benches select nothing.
+(or the queries-module helpers it calls) imports them. A change to
+``__spark_entry__.py`` or anywhere else in ``tsmp_spark/`` (mpcore,
+queries.py, plans, api) falls back to the FULL sweep — mpcore edits also
+require the reference-golden suite (tests/test_reference_goldens.py),
+which this harness reminds you of but does not run. Changes only to
+other files (tests, scripts, docs) select nothing.
 """
 
 from __future__ import annotations
@@ -221,32 +222,24 @@ def _importers(mods: set[str]) -> set[str]:
         out |= more
 
 
-def changed_queries(ref: str = "HEAD") -> set[str] | None:
-    """Queries affected by the git diff vs ``ref``.
+def affected_queries(files: list[str]) -> set[str] | None:
+    """Queries affected by a change to ``files`` (repo-relative paths).
 
-    Returns None for "run the full sweep" (a change outside the mapped
-    module roots — mpcore, queries.py, plans, api — affects oracles or
-    shared kernels whose blast radius the import map can't bound), or
-    the (possibly empty) affected-name set otherwise.
+    Returns None for "run the full sweep" (a change to ``__spark_entry__.py``,
+    which wraps every query and oracle, or outside the mapped module roots
+    — mpcore, queries.py, plans, api — affects oracles or shared kernels
+    whose blast radius the import map can't bound), or the (possibly
+    empty) affected-name set otherwise.
     """
-    import subprocess
-
-    files = subprocess.check_output(
-        ["git", "diff", "--name-only", ref, "--"], text=True
-    ).split()
     mods: set[str] = set()
     for f in files:
         if not f.endswith(".py"):
             continue
         parts = f.split("/")
         if (len(parts) == 3 and parts[0] == "tsmp_spark"
-                and parts[1] in ("operators", "streaming", "codecs")
-                and parts[2] != "__init__.py"):
+                and parts[1] in _ROOTS and parts[2] != "__init__.py"):
             mods.add(f"{parts[1]}.{parts[2][:-3]}")
-        elif f.startswith("tests/") or f == "verify_local.py" \
-                or f.startswith("bench") or f == "make_adversarial_testdata.py":
-            continue
-        elif f.startswith("tsmp_spark/"):
+        elif f == "__spark_entry__.py" or f.startswith("tsmp_spark/"):
             print(f"--changed: {f} outside the mapped roots -> FULL sweep")
             if "mpcore" in f:
                 print("  (mpcore touched: also run "
@@ -262,6 +255,16 @@ def changed_queries(ref: str = "HEAD") -> set[str] | None:
     print(f"--changed: modules {sorted(mods)} (with importers {sorted(affected)}) "
           f"-> {len(sel)} queries")
     return sel
+
+
+def changed_queries(ref: str = "HEAD") -> set[str] | None:
+    """:func:`affected_queries` of the git diff vs ``ref``."""
+    import subprocess
+
+    files = subprocess.check_output(
+        ["git", "diff", "--name-only", ref, "--"], text=True
+    ).split()
+    return affected_queries(files)
 
 
 def main() -> int:
